@@ -437,8 +437,8 @@ def incremental_near_dedup(
     the CORPUS's (a delta×corpus band join, not the whole-corpus
     self-join): cost ∝ |delta| × bucket density, not |corpus|². At
     100 TB the corpus side of this join is a maintained signature
-    table (built once, appended per ingest — the IVF-index lifecycle
-    for LSH); here it derives inline from the same shuffle-free
+    table (built once, appended per ingest — see
+    ``queries._cached_artifact``); here it derives inline from the same shuffle-free
     shingle lineage as ``minhash_near_duplicates``. Candidates verify
     with exact cross-side Jaccard (side-tagged shingle joins, so a
     re-sent id can exist on both sides without ambiguity).

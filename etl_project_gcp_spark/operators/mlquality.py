@@ -145,8 +145,8 @@ def fit_quality_classifier(
     a cheaper model, just a worse one), so the cost knob is
     GBT-specific by design."""
     from pyspark.ml.classification import GBTClassifier, LogisticRegression
-    from pyspark.ml.evaluation import BinaryClassificationEvaluator
     from pyspark.ml.feature import VectorAssembler
+    from pyspark.ml.functions import vector_to_array
 
     fcols = list(feature_cols) if feature_cols is not None else FEATURE_COLS
     bucket = F.pmod(F.xxhash64(F.col(id_col)), F.lit(holdout_mod))
@@ -159,9 +159,10 @@ def fit_quality_classifier(
             maxIter=max_iter, maxDepth=max_depth, seed=seed,
         )
         model = est.fit(vec.filter(bucket != 0))
-        auc = BinaryClassificationEvaluator(
-            labelCol=label_col, rawPredictionCol="rawPrediction"
-        ).evaluate(model.transform(vec.filter(bucket == 0)))
+        hold = model.transform(vec.filter(bucket == 0)).select(
+            F.col(label_col).alias("y"),
+            vector_to_array("rawPrediction")[1].alias("s"),
+        )
     elif model_type == "lr":
         vec = VectorAssembler(
             inputCols=fcols, outputCol="features"
@@ -175,11 +176,10 @@ def fit_quality_classifier(
             F.col(label_col).alias("y"),
             _lr_raw_score(model, fcols).alias("s"),
         )
-        auc = _rank_auc(hold, score_col="s", label_col="y")
     else:
         raise ValueError(f"model_type must be 'gbt' or 'lr', got {model_type!r}")
     model._served_feature_cols = fcols  # scoring must use the same set
-    return model, auc
+    return model, _rank_auc(hold, score_col="s", label_col="y")
 
 
 def _lr_raw_score(model, feature_cols: list[str] | None = None):
@@ -210,8 +210,10 @@ def _lr_raw_score(model, feature_cols: list[str] | None = None):
 def _rank_auc(scored: DataFrame, score_col: str, label_col: str) -> float:
     """AUC by the Mann-Whitney rank statistic with average ranks for
     ties — mathematically the trapezoidal ROC area MLlib's evaluator
-    computes. Runs on the bounded holdout sample (the one global
-    row_number window is over that sample, never the corpus)."""
+    computes, but exact: it sums half-integer ranks and integer counts,
+    so the result does not depend on partitioning. Runs on the bounded
+    holdout sample (the one global row_number window is over that
+    sample, never the corpus)."""
     from pyspark.sql import Window
 
     with_rn = scored.withColumn(
@@ -290,7 +292,7 @@ def save_quality_model(model, auc: float, path: str) -> None:
     a reloaded model scores the exact column set it was fit on (see the
     width guard in ``score_quality``) and report entries can reuse the
     fit-time AUC without refitting. Caller owns atomicity (build into a
-    temp sibling, rename into place — the IVF-index pattern). The
+    temp sibling, rename into place — ``queries._cached_artifact``). The
     sidecar goes through :mod:`sources.fsio` (Hadoop ``FileSystem``)
     like the MLlib writer itself, so a model at ``gs://…`` carries its
     metadata in the same store (r8 verdict, Missing #2)."""

@@ -675,9 +675,9 @@ def quantized_topk(
 
     ``corpus_quantized`` (the output of :func:`quantize_embeddings` on
     the same corpus) skips re-quantizing: at 100 TB the quantized
-    corpus is a MAINTAINED table (built once, appended at ingest — the
-    IVF-index lifecycle), not a per-query-batch projection, and the
-    per-element clamp/round lambdas are interpreted (no codegen for
+    corpus is a MAINTAINED table (built once, appended at ingest — see
+    ``queries._cached_artifact``), not a per-query-batch projection,
+    and the per-element clamp/round lambdas are interpreted (no codegen for
     higher-order functions), so re-deriving it costs real CPU —
     measured 0.72 s on even the 2k-row bench corpus, ~half the int8
     path's wall. Quantization is deterministic, so results are
@@ -761,7 +761,7 @@ def two_stage_topk(
     present only in the quantized side drop at the exact-rerank inner
     join (fewer than k rows per query, no error). Maintain the
     quantized table with the same lifecycle as the corpus (rebuild /
-    append on ingest, the IVF-index convention)."""
+    append on ingest)."""
     if corpus_quantized is not None:
         missing = {"q_scale", "q_vec", id_col} - set(corpus_quantized.columns)
         if missing:

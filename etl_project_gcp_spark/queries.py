@@ -2454,210 +2454,35 @@ def dedup_incremental_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _lsh_index_path(sf_dir: str) -> str:
-    """Deterministic cache location for the persisted LSH screen index
-    of a corpus — keyed by the documents file's path + size + mtime
-    plus the signature parameters (same keying as _ivf_index_path; a
-    parameter change or corpus refresh re-keys instead of serving a
-    mismatched band table)."""
-    import hashlib
+def _lsh_index(spark: SparkSession, sf_dir: str, bucketed: bool) -> str:
+    """The persisted LSH screen index of the corpus outside the
+    doc_id % 10 == 3 delta slice (`_cached_artifact`). params.json is a
+    marker because lsh_search_index refuses a sidecar-less index. A
+    bucketed build registers its catalog tables at the build dir under
+    a per-build prefix; they are dropped once built, and the first
+    search re-registers them at the installed path from the sidecar
+    (external tables: metadata-only drop)."""
     import os
+    import re
 
-    src = os.path.abspath(f"{sf_dir}/documents.parquet")
-    cfg = "k=5|h=64|b=16|delta=mod10ne3"
-    try:
-        st = os.stat(src)
-        sig = f"{src}|{cfg}|{st.st_size}|{st.st_mtime_ns}"
-    except OSError:
-        sig = f"{src}|{cfg}"
-    key = hashlib.sha1(sig.encode()).hexdigest()[:16]
-    return os.path.join(_cache_root("lsh"), key)
-
-
-def _trash_name(path: str) -> str:
-    """Per-(process, thread) trash name for _repair_unready's
-    rename-aside. Pid alone is only race-free ACROSS processes — two
-    threads in one driver share a pid, so thread B's leading
-    rmtree(trash) could delete a good build thread A had just renamed
-    aside for rescue (ADVICE r11). Thread ident makes concurrent
-    same-process repairers never collide; a stale leftover under a
-    dead thread's name is cleared by that same (pid, tid) pair on
-    reuse — a LIVE repairer always holds a different pair."""
-    import os
-    import threading
-
-    return f"{path}.trash-{os.getpid()}-{threading.get_ident()}"
-
-
-def _repair_unready(path: str, ready) -> bool:
-    """Clear an unready cache dir WITHOUT racing a concurrent builder
-    (ADVICE r10): a bare rmtree(path) between a failed readiness check
-    and the delete could destroy a fresh build another process renamed
-    into place during the gap. Rename the dir aside to a
-    (pid, thread)-suffixed trash name first — atomic, so a
-    concurrently-installed build is either untouched (our rename sees
-    nothing and raises) or moved aside INTACT, in which case readiness
-    is re-checked on the trash dir and the build is renamed straight
-    back. Returns True when a good build is now at `path` and the
-    caller should serve it instead of rebuilding."""
-    import os
-    import shutil
-
-    trash = _trash_name(path)
-    # clear any stale leftover under OUR trash name first (a crashed
-    # earlier repair, incl. (pid, tid) reuse across container
-    # restarts) — renaming a directory onto a non-empty one fails
-    # ENOTEMPTY, which would strand the unready dir at `path` and turn
-    # every future build install into a rename failure. The
-    # (pid, thread) suffix makes this delete race-free: a LIVE
-    # concurrent repairer holds a different pair (ADVICE r11).
-    shutil.rmtree(trash, ignore_errors=True)
-    try:
-        os.rename(path, trash)
-    except FileNotFoundError:
-        # the EXPECTED race: nothing cached at all, or another
-        # repairer moved it aside first; if a concurrent builder
-        # landed a good build in the gap, serve it rather than
-        # deleting or rebuilding it. Other OSError kinds (EACCES,
-        # EXDEV, ...) mean the unready dir is STILL at `path` — a
-        # rebuild would waste a full index build only for the install
-        # rename to hit the same wall, so fail fast (ADVICE r11).
-        return ready(path)
-    if ready(trash):
-        # we grabbed a just-installed GOOD build — put it back
-        try:
-            os.rename(trash, path)
-            return True
-        except OSError:
-            # yet another builder already filled path; ours is a
-            # duplicate — fall through and discard it
-            pass
-    shutil.rmtree(trash, ignore_errors=True)
-    return ready(path)
-
-
-def _install_build(tmp: str, path: str, ready) -> None:
-    """Install a finished build dir at ``path`` by atomic rename,
-    tolerating the repair window (r16): on a cache that is ALSO
-    repaired by `_repair_unready`, a failed install rename can race the
-    transient state where a concurrent repairer holds the
-    currently-installed GOOD build renamed aside to its trash name —
-    a one-shot ``if not ready(path): raise`` misreads that instant as
-    permanent failure (observed as a spurious ENOTEMPTY under the
-    multithread stress test). Re-check readiness and re-attempt the
-    rename for a short bounded period instead: the repairer either
-    renames the good build straight back (→ ready) or clears its trash
-    (→ our next rename lands). Genuinely stuck conditions (EACCES,
-    EXDEV, an unready dir nobody clears) still raise, just after the
-    bounded loop instead of instantly."""
-    import os
-    import time
-
-    last_attempt = 49
-    for attempt in range(last_attempt + 1):
-        try:
-            os.rename(tmp, path)
+    def build(tmp: str) -> None:
+        corpus = _t(spark, sf_dir, "documents").filter(
+            F.col("doc_id") % 10 != 3
+        )
+        if not bucketed:
+            DD.lsh_build_index(corpus, tmp)
             return
-        except OSError:
-            if ready(path):
-                return  # a concurrent builder's good build is in place
-            if attempt == last_attempt:
-                raise
-            time.sleep(0.01)
-
-
-def _lsh_index_ensure(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once lifecycle for the LSH screen index (the
-    _ivf_index_ensure discipline: pid-suffixed build dir, atomic
-    rename, ownership-checked readiness, loser-deletes-own on a race)."""
-    import os
-    import shutil
-
-    path = _lsh_index_path(sf_dir)
-
-    def _ready(p: str) -> bool:
-        # params.json is part of readiness: lsh_search_index REFUSES a
-        # sidecar-less index since r10 (lost-sidecar hazard), so a
-        # cached pre-sidecar artifact must read as not-ready here
-        return (
-            _dir_ready(f"{p}/bands")
-            and _dir_ready(f"{p}/shingles")
-            and os.path.exists(f"{p}/params.json")
-        )
-
-    if _ready(path):
-        return path
-    # read-repair: a cache dir that exists but fails readiness (a
-    # pre-sidecar build from an earlier round, or a half-landed one)
-    # would otherwise refuse on every future search; this cache OWNS
-    # its artifacts, so clear and rebuild under the same key —
-    # rename-aside first so a concurrent builder's fresh install is
-    # never deleted out from under its readers (ADVICE r10)
-    if _repair_unready(path, _ready):
-        return path
-    corpus = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 != 3)
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = f"{path}.build-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    try:
-        DD.lsh_build_index(corpus, tmp)
-        _install_build(tmp, path, _ready)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return path
-
-
-def _lsh_bucketed_index_ensure(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once lifecycle for the BUCKETED LSH screen index: same
-    content-keyed cache + atomic-rename discipline as
-    `_lsh_index_ensure`, but both artifacts land as bucketed tables
-    (bands clustered by (band, bh), shingles by doc_id) so a search
-    shuffles the delta side only. The catalog entries are re-registered
-    against the final location after the rename (`lsh_search_index`
-    does this from the params.json sidecar), so the build-dir tables
-    are dropped here."""
-    import hashlib
-    import os
-    import shutil
-
-    src = os.path.abspath(f"{sf_dir}/documents.parquet")
-    cfg = "k=5|h=64|b=16|delta=mod10ne3|bucketed=8"
-    try:
-        st = os.stat(src)
-        sig = f"{src}|{cfg}|{st.st_size}|{st.st_mtime_ns}"
-    except OSError:
-        sig = f"{src}|{cfg}"
-    key = hashlib.sha1(sig.encode()).hexdigest()[:16]
-    path = os.path.join(_cache_root("lsh"), key)
-    prefix = f"lsh_b_{key}"
-
-    def _ready(p: str) -> bool:
-        # see _lsh_index_ensure: sidecar presence is part of readiness
-        return (
-            _dir_ready(f"{p}/bands")
-            and _dir_ready(f"{p}/shingles")
-            and os.path.exists(f"{p}/params.json")
-        )
-
-    if _ready(path):
-        return path
-    if _repair_unready(path, _ready):  # race-safe read-repair, see above
-        return path
-    corpus = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 != 3)
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = f"{path}.build-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    try:
+        prefix = "lsh_b_" + re.sub(r"\W", "_", os.path.basename(tmp))
         DD.lsh_build_index(corpus, tmp, bucket_by=8, table_prefix=prefix)
-        # the build registered tables at the tmp location; drop them so
-        # the first search re-registers against the renamed final path
-        # (external tables: metadata-only drop)
         for t in (f"{prefix}_bands", f"{prefix}_shingles"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
-        _install_build(tmp, path, _ready)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return path
+
+    cfg = "k=5|h=64|b=16|delta=mod10ne3" + ("|bucketed=8" if bucketed else "")
+    return _cached_artifact(
+        "lsh", cfg, build,
+        ("bands/_SUCCESS", "shingles/_SUCCESS", "params.json"),
+        source=f"{sf_dir}/documents.parquet",
+    )
 
 
 @register("dedup_incremental_near_bucketed", _INCR_NEAR_ORACLE)
@@ -2672,7 +2497,7 @@ def dedup_incremental_near_bucketed(
     paid once at build (plan-tested: zero corpus-side Exchange under
     sort-merge join). Same oracle as dedup_incremental_near: the
     bucketed layout must produce the identical screen verdict."""
-    path = _lsh_bucketed_index_ensure(spark, sf_dir)
+    path = _lsh_index(spark, sf_dir, bucketed=True)
     delta = _t_wide(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 3)
     return DD.lsh_search_index(spark, path, delta)
 
@@ -2682,13 +2507,12 @@ def dedup_incremental_near_indexed(spark: SparkSession, sf_dir: str) -> DataFram
     """The ingest near-dup screen against the PERSISTED corpus
     signature index (operators/dedup.py::lsh_build_index /
     lsh_search_index) — the 100 TB lifecycle made concrete: the corpus
-    bands/shingles materialize once (content-keyed cache, atomic
-    rename — the IVF-index discipline), each ingest batch searches the
-    index with NO corpus-text rescan, and admitted batches append via
-    lsh_append_index (append==rebuild equality pytest-pinned). Same
-    oracle as dedup_incremental_near: the persisted path must produce
-    the identical screen verdict."""
-    path = _lsh_index_ensure(spark, sf_dir)
+    bands/shingles materialize once (`_cached_artifact`), each ingest
+    batch searches the index with NO corpus-text rescan, and admitted
+    batches append via lsh_append_index (append==rebuild equality
+    pytest-pinned). Same oracle as dedup_incremental_near: the
+    persisted path must produce the identical screen verdict."""
+    path = _lsh_index(spark, sf_dir, bucketed=False)
     delta = _t_wide(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 3)
     return DD.lsh_search_index(spark, path, delta)
 
@@ -2936,12 +2760,12 @@ def ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     seed quantizer measures higher (see ivf_topk docstring) — the
     trained path is the production choice for real distributions.
 
-    The trained centroids persist at a content-keyed cache path
-    (build-once lifecycle — _kmeans_centroids_ensure); repeat calls
-    skip the Lloyd iterations and reproduce identical results via the
-    shared assignment rule (equality-tested, tests/test_vector.py)."""
+    The trained centroids persist in the artifact cache
+    (`_kmeans_centroids`); repeat calls skip the Lloyd iterations and
+    reproduce identical results via the shared assignment rule
+    (equality-tested, tests/test_vector.py)."""
     emb = _t(spark, sf_dir, "embeddings")
-    cents = _kmeans_centroids_ensure(spark, emb, sf_dir, n_lists=16)
+    cents = _kmeans_centroids(spark, emb, sf_dir)
     live = VX.ivf_topk(
         emb, emb.filter(F.col("vec_id") < 5), k=10, quantizer="kmeans",
         centroids=cents,
@@ -2954,8 +2778,9 @@ def _cache_root(kind: str) -> str:
     else a uid-suffixed tempdir — never a world-shared fixed path (a
     shared /tmp name lets another user's leftover or adversarially
     pre-created directory be served as cached data, or breaks on
-    permissions). ``kind`` namespaces artifact families (ivf indexes,
-    quality models)."""
+    permissions). ``kind`` namespaces artifact families (``ivf``,
+    ``lsh``, ``mlquality``, ``binland``); `_cached_artifact` resolves
+    it on every lookup."""
     import os
     import tempfile
 
@@ -2972,195 +2797,204 @@ def _cache_root(kind: str) -> str:
     return os.path.join(tempfile.gettempdir(), f"etl_gcp_spark_{kind}_{uid}")
 
 
-def _ivf_cache_root() -> str:
-    return _cache_root("ivf")
-
-
-def _ivf_index_path(sf_dir: str, n_lists: int) -> str:
-    """Deterministic on-disk location for the persisted IVF index of a
-    given (corpus, n_lists): keyed by the embeddings file's absolute
-    path + size + mtime, so repeat invocations REUSE the index (the
-    production build-once/search-many lifecycle) and a corpus refresh
-    (new mtime) transparently re-keys instead of serving stale lists.
-    Rooted in a per-user cache dir (see _ivf_cache_root)."""
-    import hashlib
+def _trash_name(path: str) -> str:
+    """Per-(process, thread) trash name for _repair_unready's
+    rename-aside. Pid alone is only race-free ACROSS processes — two
+    threads in one process share a pid, so thread B's leading
+    rmtree(trash) could delete a good build thread A had just renamed
+    aside for rescue (ADVICE r11). Thread ident makes concurrent
+    same-process repairers never collide; a stale leftover under a
+    dead thread's name is cleared by that same (pid, tid) pair on
+    reuse — a LIVE repairer always holds a different pair."""
     import os
+    import threading
 
-    src = os.path.abspath(f"{sf_dir}/embeddings.parquet")
-    try:
-        st = os.stat(src)
-        sig = f"{src}|{n_lists}|{st.st_size}|{st.st_mtime_ns}"
-    except OSError:
-        sig = f"{src}|{n_lists}"
-    key = hashlib.sha1(sig.encode()).hexdigest()[:16]
-    return os.path.join(_ivf_cache_root(), key)
+    return f"{path}.trash-{os.getpid()}-{threading.get_ident()}"
 
 
-def _ivf_index_ready(path: str) -> bool:
-    """A reusable index = complete markers AND owned by this user (a
-    foreign-owned directory at our key is never trusted as index data)."""
-    import os
-
-    if not (
-        os.path.exists(f"{path}/centroids/_SUCCESS")
-        and os.path.exists(f"{path}/vectors/_SUCCESS")
-    ):
-        return False
-    if hasattr(os, "getuid"):
-        try:
-            if os.stat(path).st_uid != os.getuid():
-                return False
-        except OSError:
-            return False
-    return True
-
-
-def _ivf_index_ensure(emb: DataFrame, sf_dir: str, n_lists: int) -> str:
-    """Build-once/reuse-forever with crash- and race-safety: build into a
-    pid-suffixed sibling, then atomically rename into the final key. A
-    crashed build leaves only a .build-* sibling (never half-complete
-    _SUCCESS-bearing state at the served path); concurrent builders race
-    on the rename and the loser discards its copy."""
+def _repair_unready(path: str, ready) -> bool:
+    """Clear an unready cache dir WITHOUT racing a concurrent builder
+    (ADVICE r10): a bare rmtree(path) between a failed readiness check
+    and the delete could destroy a fresh build another process renamed
+    into place during the gap. Rename the dir aside to a
+    (pid, thread)-suffixed trash name first — atomic, so a
+    concurrently-installed build is either untouched (our rename sees
+    nothing and raises) or moved aside INTACT, in which case readiness
+    is re-checked on the trash dir and the build is renamed straight
+    back. Returns True when a good build is now at `path` and the
+    caller should serve it instead of rebuilding."""
     import os
     import shutil
 
-    path = _ivf_index_path(sf_dir, n_lists)
-    if _ivf_index_ready(path):
-        return path
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = f"{path}.build-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
+    trash = _trash_name(path)
+    # clear any stale leftover under OUR trash name first (a crashed
+    # earlier repair, incl. (pid, tid) reuse across container
+    # restarts) — renaming a directory onto a non-empty one fails
+    # ENOTEMPTY, which would strand the unready dir at `path` and turn
+    # every future build install into a rename failure. The
+    # (pid, thread) suffix makes this delete race-free: a LIVE
+    # concurrent repairer holds a different pair (ADVICE r11).
+    shutil.rmtree(trash, ignore_errors=True)
     try:
-        VX.ivf_build_index(emb, tmp, n_lists=n_lists)
+        os.rename(path, trash)
+    except FileNotFoundError:
+        # the EXPECTED race: nothing cached at all, or another
+        # repairer moved it aside first; if a concurrent builder
+        # landed a good build in the gap, serve it rather than
+        # deleting or rebuilding it. Other OSError kinds (EACCES,
+        # EXDEV, ...) mean the unready dir is STILL at `path` — a
+        # rebuild would waste a full index build only for the install
+        # rename to hit the same wall, so fail fast (ADVICE r11).
+        return ready(path)
+    if ready(trash):
+        # we grabbed a just-installed GOOD build — put it back
+        try:
+            os.rename(trash, path)
+            return True
+        except OSError:
+            # yet another builder already filled path; ours is a
+            # duplicate — fall through and discard it
+            pass
+    shutil.rmtree(trash, ignore_errors=True)
+    return ready(path)
+
+
+def _install_build(tmp: str, path: str, ready) -> None:
+    """Install a finished build dir at ``path`` by atomic rename,
+    tolerating the repair window (r16): on a cache that is ALSO
+    repaired by `_repair_unready`, a failed install rename can race the
+    transient state where a concurrent repairer holds the
+    currently-installed GOOD build renamed aside to its trash name —
+    a one-shot ``if not ready(path): raise`` misreads that instant as
+    permanent failure (observed as a spurious ENOTEMPTY under the
+    multithread stress test). Re-check readiness and re-attempt the
+    rename until a monotonic deadline instead: the repairer either
+    renames the good build straight back (→ ready) or clears its trash
+    (→ our next rename lands). The bound is wall time, not an attempt
+    count, so a slow filesystem gets the same grace as a fast one.
+    Genuinely stuck conditions (EACCES, EXDEV, an unready dir nobody
+    clears) still raise, just after the deadline instead of
+    instantly."""
+    import os
+    import time
+
+    deadline = time.monotonic() + 2.0
+    while True:
         try:
             os.rename(tmp, path)
+            return
         except OSError:
-            # another process won the race (target now exists) — use theirs
-            if not _ivf_index_ready(path):
+            if ready(path):
+                return  # a concurrent builder's good build is in place
+            if time.monotonic() >= deadline:
                 raise
+            time.sleep(0.01)
+
+
+def _cached_artifact(
+    kind: str, cfg: str, build, markers, source: str | None = None
+) -> str:
+    """The build-once lifecycle of every persisted artifact (indexes,
+    centroids, models, file landings): return the path of a ready
+    artifact under ``_cache_root(kind)``, building it on a miss.
+
+    - Key: sha1 of ``source``'s absolute path, size and mtime plus
+      ``cfg``, so a corpus refresh or a parameter change re-keys
+      instead of serving a stale artifact (``source=None`` keys on
+      ``cfg`` alone).
+    - Ready: every relative path in ``markers`` exists and the
+      directory is owned by this uid — a foreign-owned directory at
+      our key is never served.
+    - Miss: read-repair whatever unready directory sits at the key
+      (`_repair_unready`), then ``build(tmp)`` into a
+      per-(process, thread) ``.build-`` sibling and install it by
+      atomic rename (`_install_build`). A crashed build leaves only its
+      own sibling, concurrent builders of one key never share a build
+      dir, and a rename loser serves the winner's build."""
+    import hashlib
+    import os
+    import shutil
+    import threading
+
+    sig = cfg
+    if source is not None:
+        src = os.path.abspath(source)
+        try:
+            st = os.stat(src)
+            sig = f"{src}|{st.st_size}|{st.st_mtime_ns}|{cfg}"
+        except OSError:
+            sig = f"{src}|{cfg}"
+    path = os.path.join(
+        _cache_root(kind), hashlib.sha1(sig.encode()).hexdigest()[:16]
+    )
+    uid = os.getuid() if hasattr(os, "getuid") else None
+
+    def ready(p: str) -> bool:
+        try:
+            if uid is not None and os.stat(p).st_uid != uid:
+                return False
+        except OSError:
+            return False
+        return all(os.path.exists(os.path.join(p, m)) for m in markers)
+
+    if ready(path) or _repair_unready(path, ready):
+        return path
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = f"{path}.build-{os.getpid()}-{threading.get_ident()}"
+    shutil.rmtree(tmp, ignore_errors=True)
+    try:
+        build(tmp)
+        _install_build(tmp, path, ready)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     return path
 
 
-def _kmeans_centroids_ensure(
-    spark: SparkSession, emb: DataFrame, sf_dir: str, n_lists: int
+def _ivf_index(emb: DataFrame, sf_dir: str) -> str:
+    """The persisted 16-list IVF index of the corpus (centroids +
+    vectors partitioned by list_id; `_cached_artifact`)."""
+    return _cached_artifact(
+        "ivf", "ivf|n_lists=16",
+        lambda tmp: VX.ivf_build_index(emb, tmp, n_lists=16),
+        ("centroids/_SUCCESS", "vectors/_SUCCESS"),
+        source=f"{sf_dir}/embeddings.parquet",
+    )
+
+
+def _kmeans_centroids(
+    spark: SparkSession, emb: DataFrame, sf_dir: str
 ) -> DataFrame:
-    """Persisted trained coarse quantizer (build-once lifecycle, same
-    cache/atomic-rename/ownership discipline as _ivf_index_ensure):
-    kmeans_fit is deterministic per corpus, so the cached centroid set
-    equals a fresh fit and kmeans_assign reproduces the training-time
-    assignment exactly (vector.py::_argmax_assign is shared) — search
-    results are identical, the max_iter Lloyd iterations are paid once
-    per corpus instead of per call."""
-    import os
-    import shutil
+    """The persisted trained 16-centroid coarse quantizer
+    (`_cached_artifact`): kmeans_fit is deterministic per corpus, so
+    the cached centroid set equals a fresh fit and kmeans_assign
+    reproduces the training-time assignment exactly
+    (vector.py::_argmax_assign is shared) — search results are
+    identical, the Lloyd iterations are paid once per corpus instead
+    of per call."""
 
-    path = _ivf_index_path(sf_dir, n_lists) + ".kmeans-centroids"
-    if not _dir_ready(path):
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = f"{path}.build-{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
-        try:
-            centroids, _, _ = VX.kmeans_fit(emb, n_lists)
-            centroids.coalesce(1).write.mode("overwrite").parquet(tmp)
-            try:
-                os.rename(tmp, path)
-            except OSError:
-                if not _dir_ready(path):
-                    raise
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
-    return spark.read.parquet(path)
+    def build(tmp: str) -> None:
+        centroids, _, _ = VX.kmeans_fit(emb, 16)
+        centroids.coalesce(1).write.parquet(tmp)
 
-
-def _dir_ready(path: str) -> bool:
-    """_SUCCESS marker present AND directory owned by this user."""
-    import os
-
-    if not os.path.exists(f"{path}/_SUCCESS"):
-        return False
-    if hasattr(os, "getuid"):
-        try:
-            if os.stat(path).st_uid != os.getuid():
-                return False
-        except OSError:
-            return False
-    return True
-
-
-def _quality_model_path(sf_dir: str, tag: str) -> str:
-    """Deterministic cache location for a fitted quality model: keyed by
-    the documents file's absolute path + size + mtime plus the fit
-    variant tag and config — a corpus refresh transparently re-keys
-    instead of serving a stale model (same keying as _ivf_index_path)."""
-    import hashlib
-    import os
-
-    src = os.path.abspath(f"{sf_dir}/documents.parquet")
-    cfg = "gbt|maxIter=5|maxDepth=3"
-    try:
-        st = os.stat(src)
-        sig = f"{src}|{tag}|{cfg}|{st.st_size}|{st.st_mtime_ns}"
-    except OSError:
-        sig = f"{src}|{tag}|{cfg}"
-    key = hashlib.sha1(sig.encode()).hexdigest()[:16]
-    return os.path.join(_cache_root("mlquality"), key)
-
-
-def _quality_model_ensure(
-    feats: DataFrame,
-    sf_dir: str,
-    tag: str,
-    feature_cols: list[str] | None = None,
-):
-    """Fit-once/score-always for the quality classifier (r7 verdict ask
-    #4 — the IVF-index lifecycle applied to the model): on a cache miss
-    fit the seeded GBT, persist model + held-out AUC +
-    _served_feature_cols into a pid-suffixed sibling and atomically
-    rename into the content-keyed path; on a hit reload both. MLlib
-    save/load keeps the trees bit-exact, so a reloaded model's scores
-    equal a fresh fit's and the gate's floors stay hash-stable while
-    repeat invocations skip the boosting rounds entirely."""
-    import os
-    import shutil
-
-    path = _quality_model_path(sf_dir, tag)
-    if not _dir_ready(path):
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = f"{path}.build-{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
-        try:
-            model, auc = MQ.fit_quality_classifier(
-                feats, model_type="gbt", feature_cols=feature_cols,
-                max_iter=5, max_depth=3,
-            )
-            MQ.save_quality_model(model, auc, tmp)
-            with open(f"{tmp}/_SUCCESS", "w"):
-                pass
-            try:
-                os.rename(tmp, path)
-            except OSError:
-                if not _dir_ready(path):
-                    raise
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
-    return MQ.load_quality_model(path)
+    return spark.read.parquet(_cached_artifact(
+        "ivf", "kmeans|n_lists=16", build, ("_SUCCESS",),
+        source=f"{sf_dir}/embeddings.parquet",
+    ))
 
 
 @register("ann_ivf_index_topk", _pin_oracle("ann_ivf_index_topk"))
 def ann_ivf_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted-IVF search (X3 production lifecycle): build the index
     ONCE (centroids + vectors partitioned by list_id on disk, under a
-    deterministic per-(corpus, n_lists) path — see _ivf_index_path),
-    then every search reads only the probed partitions — partition
+    content-keyed path — see `_ivf_index`), then every search reads
+    only the probed partitions — partition
     pruning makes per-search I/O nprobe/n_lists of the corpus. Results
     are equality-tested against the in-memory IVF path and the pruning
     is plan-tested (tests/test_vector.py). Hash-checked via the
     pinned-VALUES oracle (result-equal to ann_ivf_topk by that
     equality, and the pins agree — generation asserts it)."""
     emb = _t(spark, sf_dir, "embeddings")
-    path = _ivf_index_ensure(emb, sf_dir, n_lists=16)
+    path = _ivf_index(emb, sf_dir)
     live = VX.ivf_search_index(
         spark, path, emb.filter(F.col("vec_id") < 5), k=10, nprobe=4
     ).drop("list_id")
@@ -3210,8 +3044,8 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ship_package_to_workers(spark)
     emb = _t(spark, sf_dir, "embeddings")
-    path = _ivf_index_ensure(emb, sf_dir, n_lists=16)
-    cents = _kmeans_centroids_ensure(spark, emb, sf_dir, n_lists=16)
+    path = _ivf_index(emb, sf_dir)
+    cents = _kmeans_centroids(spark, emb, sf_dir)
 
     def _report():
         return VX.recall_report(
@@ -3395,56 +3229,6 @@ def binary_embed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _pinned_or_live(spark, "binary_embed_topk", sf_dir, live)
 
 
-def _binary_landing_ensure(sf_dir: str, n_docs: int = 60) -> str:
-    """Land one deterministic PNG FILE per doc id (< n_docs) into a
-    per-(sf, n) cache dir — the on-disk fixture for the real-file
-    ingest path (binaryFile source). Bytes are the synthesize_media
-    formula payloads (media.png_encode), so the decode oracle can
-    replay the dimension formulas. Build-once: atomic tmp-sibling
-    build + rename with a _SUCCESS marker (the IVF-index lifecycle);
-    driver-local by the registry cache contract (_cache_root)."""
-    import os
-    import shutil
-    import tempfile
-
-    from etl_project_gcp_spark.operators import media as M
-
-    sf_name = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    path = os.path.join(
-        _cache_root("binland"), f"{sf_name}_n{n_docs}"
-    )
-    if _dir_ready(path):
-        return path
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = tempfile.mkdtemp(dir=os.path.dirname(path))
-    try:
-        for i in range(n_docs):
-            w, h = 8 + i % 13, 8 + i % 7
-            px = [
-                [
-                    ((x * 7 + i) % 256, (y * 11 + i) % 256, (x + y + i) % 256)
-                    for x in range(w)
-                ]
-                for y in range(h)
-            ]
-            with open(os.path.join(tmp, f"doc_{i:05d}.png"), "wb") as f:
-                f.write(M.png_encode(px))
-        with open(os.path.join(tmp, "_SUCCESS"), "w"):
-            pass
-        # decoy the glob filter must skip (proves pathGlobFilter works
-        # in the gate itself, not just in pytest)
-        with open(os.path.join(tmp, "notes.txt"), "w") as f:
-            f.write("not a png")
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            if not _dir_ready(path):
-                raise
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return path
-
-
 @register(
     "binary_file_ingest_meta",
     """
@@ -3457,7 +3241,7 @@ def _binary_landing_ensure(sf_dir: str, n_docs: int = 60) -> str:
 def binary_file_ingest_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL-FILE multimodal ingest (sources/readers.py::read_binary_dir,
     Spark's ``binaryFile`` source): 60 on-disk PNG files (one per doc
-    id, landed once per corpus — _binary_landing_ensure) are read as
+    id, landed once in the artifact cache) are read as
     (path, length, content) rows with a ``*.png`` pathGlobFilter (a
     planted .txt decoy must be skipped by the SOURCE, not a filter),
     the doc id is parsed from the file NAME, and each payload's IHDR
@@ -3468,11 +3252,38 @@ def binary_file_ingest_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     DataFrame, the `gs://bucket/**.png` shape at 100 TB (binaryFile
     reads files in parallel on executors; length filters push to the
     source)."""
+    import os
+
+    from etl_project_gcp_spark.operators import media as M
     from etl_project_gcp_spark.sources.readers import read_binary_dir
 
     ship_package_to_workers(spark)
-    land = _binary_landing_ensure(sf_dir, 60)
-    files = read_binary_dir(spark, land, glob="*.png")
+
+    def land(tmp: str) -> None:
+        # bytes are the synthesize_media formula payloads
+        # (media.png_encode), so the oracle replays the dimension
+        # formulas; they depend on the doc id alone, so the landing is
+        # keyed by its size, not by the corpus
+        os.makedirs(tmp)
+        for i in range(60):
+            w, h = 8 + i % 13, 8 + i % 7
+            px = [
+                [
+                    ((x * 7 + i) % 256, (y * 11 + i) % 256, (x + y + i) % 256)
+                    for x in range(w)
+                ]
+                for y in range(h)
+            ]
+            with open(os.path.join(tmp, f"doc_{i:05d}.png"), "wb") as f:
+                f.write(M.png_encode(px))
+        # decoy the glob filter must skip (proves pathGlobFilter works
+        # in the gate itself, not just in pytest)
+        with open(os.path.join(tmp, "notes.txt"), "w") as f:
+            f.write("not a png")
+        open(os.path.join(tmp, "_SUCCESS"), "w").close()
+
+    path = _cached_artifact("binland", "png|n=60", land, ("_SUCCESS",))
+    files = read_binary_dir(spark, path, glob="*.png")
     media = files.select(
         F.regexp_extract(F.col("path"), r"doc_(\d+)\.png$", 1)
         .cast("bigint")
@@ -5627,6 +5438,32 @@ def customer_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
 from etl_project_gcp_spark.operators import mlquality as MQ  # noqa: E402
 
 
+def _quality_model(
+    feats: DataFrame, sf_dir: str, tag: str,
+    feature_cols: list[str] | None = None,
+):
+    """Fit-once/score-always for the quality classifier
+    (`_cached_artifact`): a miss fits the seeded GBT and saves the
+    model with its held-out AUC and served feature columns; a hit
+    reloads both, returning ``(model, auc)``. MLlib save/load keeps the
+    trees bit-exact, so a reloaded model's scores equal a fresh fit's.
+    ``auc=rank`` in the key marks the exact rank-sum AUC, so a model
+    cached with the earlier float-summed AUC is not served."""
+
+    def build(tmp: str) -> None:
+        model, auc = MQ.fit_quality_classifier(
+            feats, model_type="gbt", feature_cols=feature_cols,
+            max_iter=5, max_depth=3,
+        )
+        MQ.save_quality_model(model, auc, tmp)
+
+    return MQ.load_quality_model(_cached_artifact(
+        "mlquality", f"gbt|maxIter=5|maxDepth=3|auc=rank|{tag}", build,
+        ("meta.json",),  # save_quality_model writes it last
+        source=f"{sf_dir}/documents.parquet",
+    ))
+
+
 @register(
     "quality_model_report",
     """
@@ -5659,26 +5496,23 @@ def quality_model_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     within 0.01 of the 30-round config at both sf0.01 and sf0.1),
     features localCheckpointed so the fits and scoring passes share
     the computed signals — and (r7) the fitted models + their held-out
-    AUCs PERSIST at a content-keyed cache path (_quality_model_ensure,
-    the IVF-index fit-once lifecycle): repeat invocations reload the
-    exact trees and fit-time AUCs instead of re-running the boosting
-    rounds, and a corpus refresh re-keys the cache. All seeding is
-    deterministic and MLlib save/load is bit-exact, so the VALUES
-    oracle asserts exact rows either way.
+    AUCs PERSIST in the artifact cache (`_quality_model`): repeat
+    invocations reload the exact trees and fit-time AUCs instead of
+    re-running the boosting rounds, and a corpus refresh re-keys the
+    cache. All seeding is deterministic and MLlib save/load is
+    bit-exact, so the VALUES oracle asserts exact rows either way.
     """
     from concurrent.futures import ThreadPoolExecutor
 
     docs = _t_wide(spark, sf_dir, "documents")
     feats = MQ.quality_features(docs).localCheckpoint()
     gen_cols = [c for c in MQ.FEATURE_COLS if c != "stopword_hit_ratio"]
-    # the two ensure calls are independent — interleave their (many
+    # the two model lookups are independent — interleave their (many
     # small) MLlib jobs on a cold cache, same lever as the other
     # report gates; on a warm cache both are metadata reads
     with ThreadPoolExecutor(2) as ex:
-        distill_f = ex.submit(_quality_model_ensure, feats, sf_dir, "distill")
-        gen_f = ex.submit(
-            _quality_model_ensure, feats, sf_dir, "gen", gen_cols
-        )
+        distill_f = ex.submit(_quality_model, feats, sf_dir, "distill")
+        gen_f = ex.submit(_quality_model, feats, sf_dir, "gen", gen_cols)
         model, auc = distill_f.result()
         _, gen_auc = gen_f.result()
     s1 = MQ.score_quality(feats, model).withColumnRenamed(

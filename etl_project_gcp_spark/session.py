@@ -96,9 +96,10 @@ def _prewarm_python_workers(spark: SparkSession) -> None:
     this exactly once, at startup, where it belongs — not inside
     whichever query happens to touch Python first.
 
-    Local mode only (same gate as the preloading daemon) and
-    best-effort: failures are swallowed — the pool then warms lazily as
-    before. ``SPARK_GRAFT_PREWARM=0`` disables."""
+    Runs only when the live session uses the preloading daemon (the
+    caller gates on its conf) and best-effort: failures are swallowed —
+    the pool then warms lazily as before. ``SPARK_GRAFT_PREWARM=0``
+    disables."""
     import threading
 
     def _go() -> None:
@@ -109,6 +110,9 @@ def _prewarm_python_workers(spark: SparkSession) -> None:
                 for batch in batches:
                     yield batch
 
+            # the description stays on this short-lived thread: no
+            # reset, which would clear a foreground query's local
+            # properties when they are process-global (pin-thread off)
             spark.sparkContext.setJobDescription("python worker pool prewarm")
             (
                 spark.range(0, width, 1, width)
@@ -119,11 +123,6 @@ def _prewarm_python_workers(spark: SparkSession) -> None:
             )
         except Exception:
             pass
-        finally:
-            try:
-                spark.sparkContext.setJobDescription(None)
-            except Exception:
-                pass
 
     threading.Thread(
         target=_go, name="pyworker-prewarm", daemon=True
@@ -189,7 +188,11 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    if _want_pydaemon(master) and os.environ.get(
+    # gate on the LIVE conf: getOrCreate ignores the builder's conf when
+    # a session already exists, so _want_pydaemon(master) can disagree
+    # with the daemon the session actually runs
+    daemon = spark.sparkContext.getConf().get("spark.python.daemon.module")
+    if daemon == "etl_project_gcp_spark.pydaemon" and os.environ.get(
         "SPARK_GRAFT_PREWARM", "1"
     ).strip().lower() not in ("0", "false", "no", "off"):
         prewarmed = getattr(spark, "_spark_graft_prewarmed", False)

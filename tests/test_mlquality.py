@@ -117,29 +117,23 @@ def test_quality_model_cache_is_reused_and_score_identical(
     spark, monkeypatch, tmp_path
 ):
     """r7 verdict ask #4: the report's models persist content-keyed
-    (IVF-index lifecycle) — repeat invocations reload instead of
-    refitting (unchanged _SUCCESS mtime), the reloaded model scores
+    (queries._cached_artifact) — repeat invocations reload instead of
+    refitting (unchanged meta.json mtime), the reloaded model scores
     bit-identically to the fresh fit, and the report rows are stable
     across the cold→warm transition."""
     import os
 
-    from etl_project_gcp_spark.queries import (
-        _quality_model_ensure,
-        _quality_model_path,
-        quality_model_report,
-    )
+    from etl_project_gcp_spark import queries as Q
 
     monkeypatch.setenv("ETL_GCP_SPARK_CACHE_DIR", str(tmp_path))
     sf = "/root/testdata/sf0.001"
-    p1 = _quality_model_path(sf, "distill")
-    assert p1 == _quality_model_path(sf, "distill")
-    assert _quality_model_path(sf, "gen") != p1
-
-    cold = sorted(map(tuple, quality_model_report(spark, sf).collect()))
-    assert os.path.exists(f"{p1}/_SUCCESS")
-    mtime = os.path.getmtime(f"{p1}/_SUCCESS")
-    warm = sorted(map(tuple, quality_model_report(spark, sf).collect()))
-    assert os.path.getmtime(f"{p1}/_SUCCESS") == mtime  # reused, not refit
+    cold = sorted(map(tuple, Q.quality_model_report(spark, sf).collect()))
+    keys = sorted(os.listdir(tmp_path / "mlquality"))
+    assert len(keys) == 2  # distinct keys for the distill and gen fits
+    metas = [tmp_path / "mlquality" / k / "meta.json" for k in keys]
+    mtimes = [os.path.getmtime(m) for m in metas]
+    warm = sorted(map(tuple, Q.quality_model_report(spark, sf).collect()))
+    assert [os.path.getmtime(m) for m in metas] == mtimes  # reused
     assert cold == warm
     assert all(r[2] for r in cold), cold
 
@@ -147,7 +141,8 @@ def test_quality_model_cache_is_reused_and_score_identical(
     feats = MQ.quality_features(
         spark.read.parquet(f"{sf}/documents.parquet")
     ).localCheckpoint()
-    model, auc = _quality_model_ensure(feats, sf, "distill")
+    model, auc = Q._quality_model(feats, sf, "distill")
+    assert sorted(os.listdir(tmp_path / "mlquality")) == keys  # a hit
     fresh, fresh_auc = MQ.fit_quality_classifier(
         feats, model_type="gbt", max_iter=5, max_depth=3
     )

@@ -241,6 +241,7 @@ def test_binary_file_ingest_meta_decoy_and_rebuild(spark, tmp_path, monkeypatch)
     _SUCCESS-marked), contains a .txt decoy the entry's glob must
     skip, and a cache wipe forces a clean rebuild with identical
     results."""
+    import os
     import shutil
 
     from etl_project_gcp_spark import queries as Q
@@ -250,11 +251,9 @@ def test_binary_file_ingest_meta_decoy_and_rebuild(spark, tmp_path, monkeypatch)
     sf = "/root/testdata/sf0.001"
     a = sorted(map(tuple, fn(spark, sf).collect()))
     assert len(a) == 60 and all(len(r) == 3 for r in a)
-    land = Q._binary_landing_ensure(sf, 60)
-    import os
-
-    names = set(os.listdir(land))
+    (key,) = os.listdir(tmp_path / "cache" / "binland")
+    names = set(os.listdir(tmp_path / "cache" / "binland" / key))
     assert "notes.txt" in names and "_SUCCESS" in names
-    shutil.rmtree(os.path.dirname(land))
+    shutil.rmtree(tmp_path / "cache" / "binland")
     b = sorted(map(tuple, fn(spark, sf).collect()))
     assert a == b

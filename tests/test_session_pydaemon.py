@@ -87,3 +87,23 @@ def test_prewarm_runs_once_per_session(spark):
     again = get_spark(app_name="prewarm-idempotence-check")
     assert again is spark
     assert getattr(again, "_spark_graft_prewarmed", False) is True
+
+
+def test_prewarm_gate_follows_live_session_conf(spark, monkeypatch):
+    """getOrCreate ignores the builder's conf for an existing session,
+    so the prewarm is gated on the daemon the LIVE session runs, not on
+    a recomputed _want_pydaemon: with the selection forced off after
+    the session exists, a re-build of the (daemon-backed) session still
+    prewarms."""
+    from etl_project_gcp_spark import session as S
+
+    daemon = spark.sparkContext.getConf().get("spark.python.daemon.module")
+    if daemon != "etl_project_gcp_spark.pydaemon":
+        pytest.skip("test session runs without the preloading daemon")
+    calls = []
+    monkeypatch.setattr(S, "_prewarm_python_workers", calls.append)
+    monkeypatch.setenv("SPARK_GRAFT_PYDAEMON", "0")
+    monkeypatch.delenv("SPARK_GRAFT_PREWARM", raising=False)
+    monkeypatch.setattr(spark, "_spark_graft_prewarmed", False)
+    assert S.get_spark(app_name="prewarm-gate-check") is spark
+    assert calls == [spark]

@@ -1299,48 +1299,111 @@ def test_lsh_append_layout_guard_covers_presidecar_and_count_conflict(
 
 
 # ---------------------------------------------------------------------------
-# _repair_unready: race-safe read-repair of unready cache dirs (ADVICE r10)
+# The artifact-cache lifecycle (queries._cached_artifact) and its race-safe
+# read-repair (_repair_unready) and install (_install_build)
 # ---------------------------------------------------------------------------
 
+_LSH = ("bands/_SUCCESS", "shingles/_SUCCESS", "params.json")
+# The registry's artifact families: (cache kind, readiness markers).
+_FAMILIES = {
+    "ivf_index": ("ivf", ("centroids/_SUCCESS", "vectors/_SUCCESS")),
+    "kmeans_centroids": ("ivf", ("_SUCCESS",)),
+    "lsh_index": ("lsh", _LSH),
+    "lsh_bucketed_index": ("lsh", _LSH),
+    "quality_model": ("mlquality", ("meta.json",)),
+    "binary_landing": ("binland", ("_SUCCESS",)),
+}
 
-def _mk_index(p, ready=True):
+
+def _mk_index(p, ready=True, markers=_LSH):
+    """A fresh NON-EMPTY artifact dir at ``p``; unready = last marker
+    missing."""
+    import os
+    import shutil
+
+    shutil.rmtree(p, ignore_errors=True)
+    os.makedirs(p)
+    open(os.path.join(p, "part-00000"), "w").close()
+    for m in markers if ready else markers[:-1]:
+        os.makedirs(os.path.dirname(os.path.join(p, m)), exist_ok=True)
+        open(os.path.join(p, m), "w").close()
+
+
+def _ready(p, markers=_LSH):
     import os
 
-    os.makedirs(os.path.join(p, "bands"), exist_ok=True)
-    os.makedirs(os.path.join(p, "shingles"), exist_ok=True)
-    if ready:
-        with open(os.path.join(p, "params.json"), "w") as f:
-            f.write("{}")
+    return all(os.path.exists(os.path.join(p, m)) for m in markers)
 
 
-def _ready(p):
+def _strands(d):
     import os
 
-    return (
-        os.path.isdir(os.path.join(p, "bands"))
-        and os.path.isdir(os.path.join(p, "shingles"))
-        and os.path.exists(os.path.join(p, "params.json"))
-    )
+    return [f for f in os.listdir(d) if ".trash-" in f or ".build-" in f]
 
 
-def test_repair_unready_clears_stale_dir(tmp_path):
-    """The normal read-repair case: a pre-sidecar/half-landed dir is
-    removed and the caller is told to rebuild."""
+def _artifact(monkeypatch, tmp_path, markers=_LSH, builds=None, kind="lsh"):
+    """``() -> path``: the lifecycle over a fake build that lands
+    ``markers`` (recording each build dir in ``builds``), with the
+    cache rooted in ``tmp_path``."""
+    from etl_project_gcp_spark import queries as Q
+
+    monkeypatch.setenv("ETL_GCP_SPARK_CACHE_DIR", str(tmp_path))
+
+    def build(tmp):
+        if builds is not None:
+            builds.append(tmp)
+        _mk_index(tmp, ready=True, markers=markers)
+
+    return lambda: Q._cached_artifact(kind, "cfg", build, markers)
+
+
+def test_cached_artifact_keys_by_source_and_cfg(tmp_path, monkeypatch):
+    """Same (kind, cfg, source) -> same path, served without a rebuild;
+    a cfg change or a source refresh (new mtime) re-keys."""
     import os
 
-    from etl_project_gcp_spark.queries import _repair_unready
+    from etl_project_gcp_spark import queries as Q
 
-    p = str(tmp_path / "idx")
+    monkeypatch.setenv("ETL_GCP_SPARK_CACHE_DIR", str(tmp_path / "cache"))
+    src = tmp_path / "corpus.parquet"
+    src.write_text("v1")
+    builds = []
+
+    def build(tmp):
+        builds.append(tmp)
+        _mk_index(tmp)
+
+    def get(cfg):
+        return Q._cached_artifact("ivf", cfg, build, _LSH, source=str(src))
+
+    p1 = get("n_lists=16")
+    assert get("n_lists=16") == p1 and len(builds) == 1
+    assert os.path.dirname(p1) == str(tmp_path / "cache" / "ivf")
+    assert ".build-" in builds[0]
+    assert get("n_lists=8") != p1
+    os.utime(src, ns=(1, 1))
+    assert get("n_lists=16") != p1
+    assert len(builds) == 3
+
+
+def test_repair_unready_clears_stale_dir(tmp_path, monkeypatch):
+    """The normal read-repair case: a pre-sidecar/half-landed dir at
+    the key is cleared and rebuilt in place."""
+    builds = []
+    get = _artifact(monkeypatch, tmp_path, builds=builds)
+    p = get()
     _mk_index(p, ready=False)
-    assert _repair_unready(p, _ready) is False
-    assert not os.path.exists(p)  # stale dir gone, rebuild proceeds
+    assert get() == p and _ready(p) and len(builds) == 2
+    assert not _strands(tmp_path / "lsh")
 
 
-def test_repair_unready_missing_dir_is_noop(tmp_path):
+def test_repair_unready_missing_dir_is_noop(tmp_path, monkeypatch):
     from etl_project_gcp_spark.queries import _repair_unready
 
-    p = str(tmp_path / "never_built")
-    assert _repair_unready(p, _ready) is False
+    assert _repair_unready(str(tmp_path / "never_built"), _ready) is False
+    builds = []
+    get = _artifact(monkeypatch, tmp_path, builds=builds)
+    assert _ready(get()) and len(builds) == 1
 
 
 def test_repair_unready_preserves_concurrently_installed_build(tmp_path):
@@ -1351,9 +1414,7 @@ def test_repair_unready_preserves_concurrently_installed_build(tmp_path):
     the trash dir and put it back intact."""
     import os
 
-    from etl_project_gcp_spark.queries import _repair_unready
-
-    from etl_project_gcp_spark.queries import _trash_name
+    from etl_project_gcp_spark.queries import _repair_unready, _trash_name
 
     p = str(tmp_path / "idx")
     _mk_index(p, ready=True)  # the concurrent builder's finished install
@@ -1389,24 +1450,22 @@ def test_repair_unready_lost_rename_race_rechecks_path(tmp_path, monkeypatch):
     assert _ready(p)
 
 
-def test_repair_unready_survives_stale_trash_leftover(tmp_path):
+def test_repair_unready_survives_stale_trash_leftover(tmp_path, monkeypatch):
     """A crashed earlier repair (or pid reuse across container
     restarts) can leave a non-empty dir under OUR trash name; renaming
     a directory onto a non-empty one fails ENOTEMPTY, which would have
     stranded the unready dir in place and broken every later build
-    install. The helper must clear its own trash name first."""
+    install. The repair must clear its own trash name first."""
     import os
-
-    from etl_project_gcp_spark.queries import _repair_unready
 
     from etl_project_gcp_spark.queries import _trash_name
 
-    p = str(tmp_path / "idx")
+    get = _artifact(monkeypatch, tmp_path)
+    p = get()
     _mk_index(p, ready=False)
     stale = _trash_name(p)
     _mk_index(stale, ready=False)  # non-empty leftover under our name
-    assert _repair_unready(p, _ready) is False
-    assert not os.path.exists(p)  # unready dir actually cleared
+    assert get() == p and _ready(p)  # unready dir cleared and rebuilt
     assert not os.path.exists(stale)
 
 
@@ -1439,14 +1498,12 @@ def test_repair_unready_reraises_non_enoent_rename_failure(
     lost-race ENOENT with real failures (EACCES, EXDEV). On a real
     failure the unready dir is STILL at `path`, so swallowing it
     commits the caller to a full rebuild whose install rename hits the
-    same wall — fail fast instead."""
+    same wall — fail fast, before building anything."""
     import os
 
-    import pytest
-
-    from etl_project_gcp_spark import queries as Q
-
-    p = str(tmp_path / "idx")
+    builds = []
+    get = _artifact(monkeypatch, tmp_path, builds=builds)
+    p = get()
     _mk_index(p, ready=False)
 
     def denied_rename(src, dst):
@@ -1454,63 +1511,105 @@ def test_repair_unready_reraises_non_enoent_rename_failure(
 
     monkeypatch.setattr(os, "rename", denied_rename)
     with pytest.raises(PermissionError):
-        Q._repair_unready(p, _ready)
+        get()
     assert os.path.exists(p)  # untouched — nothing was deleted
+    assert len(builds) == 1  # the failed lookup built nothing
 
 
-def test_repair_unready_multithread_stress_converges(tmp_path):
-    """Real-thread stress for the whole repair/build/install lifecycle
-    (the r10-r12 ADVICE thread): 8 threads race _repair_unready plus a
-    build-and-install on ONE cache path, alternating rounds that
-    pre-seed a READY dir (exercises the grab-good-build rescue) and an
-    UNREADY dir (exercises clear-and-rebuild). Under the r11 pid-only
-    trash naming, a loser thread's leading rmtree(trash) could delete
-    the winner's renamed-aside good build and surface as an uncaught
+def test_cached_artifact_rebuilds_foreign_owned_dir(tmp_path, monkeypatch):
+    """A directory at our key owned by another uid is never served: it
+    is moved aside and rebuilt like an unready one."""
+    import os
+
+    if os.getuid() != 0:
+        pytest.skip("chown to a foreign uid needs root")
+    builds = []
+    get = _artifact(monkeypatch, tmp_path, builds=builds)
+    p = get()
+    os.chown(p, os.getuid() + 4242, -1)
+    assert get() == p and os.stat(p).st_uid == os.getuid()
+    assert len(builds) == 2 and not _strands(tmp_path / "lsh")
+
+
+def test_cached_artifact_concurrent_builds_of_one_key(tmp_path, monkeypatch):
+    """Two threads of one process miss the same key and build at once
+    (a barrier inside the slow build holds both in it). Each builds in
+    its own (pid, thread) dir — a shared pid-only build name let one
+    thread delete the other's in-progress build — and both get the one
+    installed, ready artifact back with no .build-/.trash- left."""
+    import os
+    import threading
+    import time
+
+    from etl_project_gcp_spark import queries as Q
+
+    monkeypatch.setenv("ETL_GCP_SPARK_CACHE_DIR", str(tmp_path))
+    both_building = threading.Barrier(2, timeout=30)
+    builds, got, errors = [], [], []
+
+    def build(tmp):
+        builds.append(tmp)
+        os.makedirs(tmp)
+        both_building.wait()
+        time.sleep(0.2)
+        _mk_index(tmp, ready=True)
+
+    def worker():
+        try:
+            got.append(Q._cached_artifact("lsh", "cfg", build, _LSH))
+        except Exception as exc:  # noqa: BLE001 — collected for the assert
+            errors.append(repr(exc))
+
+    threads = [threading.Thread(target=worker) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=60)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert len(builds) == 2 and builds[0] != builds[1]
+    assert len(got) == 2 and got[0] == got[1] and _ready(got[0])
+    assert not _strands(tmp_path / "lsh")
+
+
+@pytest.mark.parametrize("family", sorted(_FAMILIES))
+def test_repair_unready_multithread_stress_converges(
+    tmp_path, monkeypatch, family
+):
+    """Real-thread stress for the whole lifecycle (the r10-r12 ADVICE
+    thread), per artifact family's marker set: 8 threads race
+    `_cached_artifact` on ONE key, alternating rounds that pre-seed a
+    READY dir (served as is) and a non-empty UNREADY dir (read-repair,
+    then concurrent builds and installs). Under the r11 pid-only trash
+    naming, a loser thread's leading rmtree(trash) could delete the
+    winner's renamed-aside good build and surface as an uncaught
     FileNotFoundError on the rename-back — so the regression signal
     here is ANY exception escaping a worker. After every round all
-    repairs and installs have completed (barrier), so the path must be
-    ready and no .trash-*/.build-* strands may remain."""
-    import os
-    import shutil
+    repairs and installs have completed (barrier), so every thread got
+    the one key back, it is ready, and no .trash-*/.build-* strands
+    remain."""
+    import sys
     import threading
 
-    from etl_project_gcp_spark.queries import _install_build, _repair_unready
-
-    p = str(tmp_path / "idx")
+    kind, markers = _FAMILIES[family]
+    get = _artifact(monkeypatch, tmp_path, markers=markers, kind=kind)
+    p = get()
     n_threads, n_rounds = 8, 12
     barrier = threading.Barrier(n_threads)
     errors = []
-
-    def build_and_install():
-        # the production install helper (r16): a one-shot rename +
-        # ready check here could re-raise ENOTEMPTY against a good
-        # build a concurrent repairer had momentarily renamed aside
-        tmp = f"{p}.build-{os.getpid()}-{threading.get_ident()}"
-        shutil.rmtree(tmp, ignore_errors=True)
-        _mk_index(tmp, ready=True)
-        try:
-            _install_build(tmp, p, _ready)
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
 
     def worker(idx):
         try:
             for rnd in range(n_rounds):
                 barrier.wait()
                 if idx == 0:
-                    shutil.rmtree(p, ignore_errors=True)
-                    _mk_index(p, ready=(rnd % 2 == 0))
+                    _mk_index(p, ready=(rnd % 2 == 0), markers=markers)
                 barrier.wait()
-                if not (_ready(p) or _repair_unready(p, _ready)):
-                    build_and_install()
+                assert get() == p
                 barrier.wait()
                 if idx == 0:
-                    assert _ready(p), f"round {rnd}: path not ready"
-                    strands = [
-                        f
-                        for f in os.listdir(tmp_path)
-                        if ".trash-" in f or ".build-" in f
-                    ]
+                    assert _ready(p, markers), f"round {rnd}: not ready"
+                    strands = _strands(tmp_path / kind)
                     assert not strands, f"round {rnd}: strands {strands}"
         except Exception as exc:  # noqa: BLE001 — collected for the assert
             errors.append((idx, repr(exc)))
@@ -1520,12 +1619,57 @@ def test_repair_unready_multithread_stress_converges(tmp_path):
     threads = [
         threading.Thread(target=worker, args=(i,)) for i in range(n_threads)
     ]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join(timeout=60)
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)  # interleave the threads more finely
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
     assert not errors, errors
-    assert _ready(p)
+    assert _ready(p, markers)
+
+
+@pytest.mark.parametrize(
+    "entry,kind,marker",
+    [
+        ("ann_ivf_index_topk", "ivf", "centroids"),
+        ("quality_model_report", "mlquality", "meta.json"),
+        ("binary_file_ingest_meta", "binland", "_SUCCESS"),
+    ],
+)
+def test_unready_dir_at_registry_key_is_rebuilt(
+    spark, sf_dir, tmp_path, monkeypatch, entry, kind, marker
+):
+    """The registry's own artifacts: a non-empty UNREADY dir sitting at
+    an entry's key (a half-landed build, markers lost) is repaired and
+    rebuilt on the next call, with the same rows. These families used
+    to raise on every call instead: the install rename onto the
+    non-empty dir failed and so did the readiness re-check."""
+    import os
+    import shutil
+
+    from etl_project_gcp_spark import queries as Q
+
+    monkeypatch.setenv("ETL_GCP_SPARK_CACHE_DIR", str(tmp_path))
+    fn = Q.queries()[entry]
+    cold = sorted(map(tuple, fn(spark, sf_dir).collect()))
+    keys = os.listdir(tmp_path / kind)
+    assert keys and not _strands(tmp_path / kind)
+    for key in keys:
+        lost = tmp_path / kind / key / marker
+        if lost.is_dir():
+            shutil.rmtree(lost)
+        else:
+            lost.unlink()
+        assert os.listdir(lost.parent)  # non-empty, unready
+    again = sorted(map(tuple, fn(spark, sf_dir).collect()))
+    assert again == cold
+    assert sorted(os.listdir(tmp_path / kind)) == sorted(keys)
+    assert not _strands(tmp_path / kind)
 
 
 @pytest.mark.parametrize("bands,rows_per_band", [(16, 4), (8, 8), (32, 2)])

@@ -295,27 +295,31 @@ def test_recall_report_validates_floors_before_searching(spark, sf01_dir):
         )
 
 
-def test_ivf_index_path_is_deterministic_and_reused(spark, sf01_dir):
+def test_ivf_index_path_is_deterministic_and_reused(
+    spark, sf01_dir, monkeypatch, tmp_path
+):
     """Production lifecycle guard: repeat invocations of the persisted-
-    index query hit the SAME path and skip the rebuild (no per-call
-    mkdtemp leak)."""
+    index query resolve the SAME cache key and skip the rebuild (no
+    per-call mkdtemp leak: one artifact in the cache)."""
     import os
 
-    from etl_project_gcp_spark.queries import (
-        _ivf_index_path,
-        _ivf_index_ready,
-        ann_ivf_index_topk,
-    )
+    from etl_project_gcp_spark import queries as Q
 
-    p1 = _ivf_index_path(sf01_dir, n_lists=16)
-    p2 = _ivf_index_path(sf01_dir, n_lists=16)
-    assert p1 == p2
-    assert _ivf_index_path(sf01_dir, n_lists=8) != p1
+    monkeypatch.setenv("ETL_GCP_SPARK_CACHE_DIR", str(tmp_path))
+    paths = []
+    real = Q._cached_artifact
 
-    first = ann_ivf_index_topk(spark, sf01_dir).collect()
-    assert _ivf_index_ready(p1)
+    def spy(*args, **kwargs):
+        paths.append(real(*args, **kwargs))
+        return paths[-1]
+
+    monkeypatch.setattr(Q, "_cached_artifact", spy)
+    first = Q.ann_ivf_index_topk(spark, sf01_dir).collect()
+    p1 = paths[-1]
     mtime = os.path.getmtime(f"{p1}/vectors/_SUCCESS")
-    second = ann_ivf_index_topk(spark, sf01_dir).collect()
+    second = Q.ann_ivf_index_topk(spark, sf01_dir).collect()
+    assert paths == [p1, p1]
+    assert os.listdir(tmp_path / "ivf") == [os.path.basename(p1)]
     # unchanged _SUCCESS mtime == the second call reused, not rebuilt
     assert os.path.getmtime(f"{p1}/vectors/_SUCCESS") == mtime
     assert sorted(map(tuple, first)) == sorted(map(tuple, second))
