@@ -14,6 +14,13 @@ reports success independently; a layer's success is the AND of its
 statements; the pipeline halts at the first failed LAYER but still
 attempts every statement within a layer.
 
+Execution: a layer's three statements are independent, so they run
+concurrently on the shared session (``run_concurrently``) — each is a
+chain of small one-task jobs, and running them side by side keeps the
+cores busy that a sequential chain leaves idle. Layers stay strictly
+sequential: silver starts only after every bronze statement has
+finished and bronze succeeded, which is what fail-fast needs.
+
 Scale notes: every layer materializes as Parquet (lineage truncation +
 restartability — SURVEY §4.1); gold sales_summary is partitioned by
 (year, month) — the SURVEY §4.1 100 TB disposition — so calendar-pruned
@@ -29,11 +36,14 @@ in joins so the fact table never shuffles.
 from __future__ import annotations
 
 import logging
+from collections.abc import Callable, Hashable
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
-from functools import reduce
+from functools import partial, reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from etl_project_gcp_spark.functions import (
     full_name,
@@ -47,6 +57,29 @@ log = logging.getLogger(__name__)
 BRONZE_TABLES = ("employees", "products", "sales")
 SILVER_TABLES = ("employees", "products", "sales")
 GOLD_TABLES = ("sales_analytics", "product_metrics", "sales_summary")
+
+def run_concurrently(
+    spark: SparkSession, tasks: dict[Hashable, Callable[[], object]]
+) -> dict:
+    """Run independent callables side by side on the shared session and
+    return their results keyed in the order ``tasks`` declares them.
+
+    One short-lived thread per task. Each task is wrapped in
+    ``inheritable_thread_target(spark)`` at submit time, so the caller's
+    job group, description and tags reach every job it starts (cancelling
+    the caller's group cancels them); each wrap clones the caller's local
+    properties, so sibling tasks never share one mutable copy. The pool's
+    threads have exited when this returns. A task that raises re-raises
+    here, after every task has finished."""
+    def carry(fn):
+        wrap = inheritable_thread_target(spark)
+        # pinned-thread mode off: there are no per-thread JVM properties
+        # to carry, and the call hands the session back unwrapped
+        return fn if wrap is spark else wrap(fn)
+
+    with ThreadPoolExecutor(max_workers=len(tasks)) as pool:
+        futures = {key: pool.submit(carry(fn)) for key, fn in tasks.items()}
+    return {key: f.result() for key, f in futures.items()}
 
 
 @dataclass
@@ -80,36 +113,44 @@ class MedallionPipeline:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(self.path(layer, table))
 
+    def _run_layer(
+        self,
+        layer: str,
+        builders: dict[str, Callable[[], DataFrame]],
+        partition_by: dict[str, list[str]] | None = None,
+    ) -> LayerResult:
+        """Build and write every table of one layer, one statement per
+        table, concurrently; each reports its own success, in declared
+        order."""
+        def statement(table: str, build: Callable[[], DataFrame]) -> bool:
+            try:
+                self._write(build(), layer, table,
+                            partition_by=(partition_by or {}).get(table))
+                return True
+            except Exception as e:  # per-statement failure, keep going (:100-101)
+                log.error("%s %s failed: %.100s", layer, table, e)
+                return False
+
+        return LayerResult(layer, run_concurrently(self.spark, {
+            table: partial(statement, table, build)
+            for table, build in builders.items()
+        }))
+
     # -- bronze (etl_medallion.py:73-103) ---------------------------------
     def bronze_layer(self, sources: dict[str, str]) -> LayerResult:
         """Strict CSV → Parquet load per table, schema autodetect."""
-        res = LayerResult("bronze")
-        for table in BRONZE_TABLES:
-            try:
-                df = read_csv_bronze(self.spark, sources[table])
-                self._write(df, "bronze", table)
-                res.statement_success[table] = True
-            except Exception as e:  # per-statement failure, keep going (:100-101)
-                log.error("bronze %s failed: %.100s", table, e)
-                res.statement_success[table] = False
-        return res
+        return self._run_layer("bronze", {
+            table: (lambda t=table: read_csv_bronze(self.spark, sources[t]))
+            for table in BRONZE_TABLES
+        })
 
     # -- silver (etl_medallion.py:105-149) --------------------------------
     def silver_layer(self) -> LayerResult:
-        res = LayerResult("silver")
-        ops = {
+        return self._run_layer("silver", {
             "employees": self._silver_employees,
             "products": self._silver_products,
             "sales": self._silver_sales,
-        }
-        for table, fn in ops.items():
-            try:
-                self._write(fn(), "silver", table)
-                res.statement_success[table] = True
-            except Exception as e:
-                log.error("silver %s failed: %.100s", table, e)
-                res.statement_success[table] = False
-        return res
+        })
 
     def _silver_employees(self) -> DataFrame:
         """7-column cleanse (etl_medallion.py:116-126): TRIM names,
@@ -139,20 +180,11 @@ class MedallionPipeline:
 
     # -- gold (etl_medallion.py:151-218) ----------------------------------
     def gold_layer(self) -> LayerResult:
-        res = LayerResult("gold")
-        ops = {
-            "sales_analytics": (self._gold_sales_analytics, None),
-            "product_metrics": (self._gold_product_metrics, None),
-            "sales_summary": (self._gold_sales_summary, ["year", "month"]),
-        }
-        for table, (fn, part) in ops.items():
-            try:
-                self._write(fn(), "gold", table, partition_by=part)
-                res.statement_success[table] = True
-            except Exception as e:
-                log.error("gold %s failed: %.100s", table, e)
-                res.statement_success[table] = False
-        return res
+        return self._run_layer("gold", {
+            "sales_analytics": self._gold_sales_analytics,
+            "product_metrics": self._gold_product_metrics,
+            "sales_summary": self._gold_sales_summary,
+        }, partition_by={"sales_summary": ["year", "month"]})
 
     def _gold_sales_analytics(self) -> DataFrame:
         """12-col 3-way left-join projection (etl_medallion.py:161-178).
@@ -298,7 +330,9 @@ class MedallionPipeline:
 
     # -- orchestration (etl_medallion.py:302-344) -------------------------
     def run_etl(self, sources: dict[str, str]) -> dict:
-        """Sequential layers, fail-fast on first failed layer (:316-321)."""
+        """Sequential layers, fail-fast on first failed layer (:316-321).
+        Within a layer the statements run concurrently and every one is
+        attempted; the next layer starts only after all of them finish."""
         results: list[LayerResult] = []
         layers = [
             ("Bronze", lambda: self.bronze_layer(sources)),
@@ -331,7 +365,9 @@ def refresh_partitions(
     """Replace exactly the ``touched`` partitions of a partitioned
     Parquet table with ``slice_df`` (the recomputed rows for those
     partitions), under ``partitionOverwriteMode=dynamic`` — no other
-    partition's files are opened, rewritten, or re-committed.
+    partition's files are opened, rewritten, or re-committed. The mode
+    is a per-write option: the session conf is never changed, so writes
+    running concurrently on the same session keep their own mode.
 
     Dynamic overwrite replaces only partitions PRESENT in the written
     frame; a touched partition whose recomputed slice is EMPTY (every
@@ -365,15 +401,9 @@ def refresh_partitions(
             f"derivation disagree"
         )
     if present:
-        prev = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (slice_df.write.mode("overwrite")
-                     .partitionBy(*partition_cols).parquet(target_path))
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        (slice_df.write.mode("overwrite")
+                 .option("partitionOverwriteMode", "dynamic")
+                 .partitionBy(*partition_cols).parquet(target_path))
     emptied = [
         t for t in touched
         if tuple(t[c] for c in partition_cols) not in present

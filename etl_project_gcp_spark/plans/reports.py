@@ -3,7 +3,9 @@
 Three gold-layer report queries: top products by revenue (O3), channel
 rollup with the reference's literal avg-of-avgs (A3), department summary
 (A4). Each returns a small DataFrame; ``sample_reports`` collects the
-first rows like the reference's print loop (:387-391).
+first rows like the reference's print loop (:387-391), running the three
+independent collects concurrently on the shared session
+(``run_concurrently``).
 """
 
 from __future__ import annotations
@@ -11,7 +13,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from etl_project_gcp_spark.plans.medallion import MedallionPipeline
+from etl_project_gcp_spark.plans.medallion import (
+    MedallionPipeline,
+    run_concurrently,
+)
 
 
 def top_products(pipe: MedallionPipeline, k: int = 5) -> DataFrame:
@@ -51,8 +56,13 @@ def top_departments(pipe: MedallionPipeline, k: int = 5) -> DataFrame:
 
 def sample_reports(pipe: MedallionPipeline, n: int = 3) -> dict:
     """First-n rows of each report (etl_medallion.py:387-391 shape)."""
-    return {
-        "top_products": [r.asDict() for r in top_products(pipe).limit(n).collect()],
-        "sales_by_channel": [r.asDict() for r in sales_by_channel(pipe).limit(n).collect()],
-        "top_departments": [r.asDict() for r in top_departments(pipe).limit(n).collect()],
+    reports = {
+        "top_products": top_products,
+        "sales_by_channel": sales_by_channel,
+        "top_departments": top_departments,
     }
+    return run_concurrently(pipe.spark, {
+        name: (lambda report=report: [
+            r.asDict() for r in report(pipe).limit(n).collect()])
+        for name, report in reports.items()
+    })

@@ -3,16 +3,22 @@
 The reference has no test suite; it verifies at runtime: table
 existence + row counts per layer, expected-table checklists, and a
 first-5-columns sample. Same surface here, against the Parquet
-lakehouse + Spark catalog.
+lakehouse + Spark catalog. The nine per-table reads are independent and
+run concurrently on the shared session (``run_concurrently``); results
+keep the reference's layer and table order.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
+from functools import partial
 
 from etl_project_gcp_spark.plans.medallion import (
     BRONZE_TABLES,
     GOLD_TABLES,
     SILVER_TABLES,
     MedallionPipeline,
+    run_concurrently,
 )
 
 EXPECTED_TABLES = {
@@ -22,39 +28,48 @@ EXPECTED_TABLES = {
 }
 
 
+def _audit_each_table(
+    pipe: MedallionPipeline, audit: Callable[[str, str], object]
+) -> dict[str, dict]:
+    """``audit(layer, table)`` for every expected table, concurrently;
+    returned as {layer: {table: result}} in declared order."""
+    got = run_concurrently(pipe.spark, {
+        (layer, t): partial(audit, layer, t)
+        for layer, tables in EXPECTED_TABLES.items() for t in tables
+    })
+    return {
+        layer: {t: got[layer, t] for t in tables}
+        for layer, tables in EXPECTED_TABLES.items()
+    }
+
+
 def verify_results(pipe: MedallionPipeline) -> dict:
     """Row-count audit per layer (etl_medallion.py:220-255): every
     expected table must exist and report its COUNT(*)."""
-    out: dict[str, dict] = {}
-    ok = True
-    for layer, tables in EXPECTED_TABLES.items():
-        out[layer] = {}
-        for t in tables:
-            try:
-                out[layer][t] = pipe.table(layer, t).count()
-            except Exception:
-                out[layer][t] = None
-                ok = False
-    out["success"] = ok
+    def count(layer: str, t: str) -> int | None:
+        try:
+            return pipe.table(layer, t).count()
+        except Exception:
+            return None
+
+    out: dict = _audit_each_table(pipe, count)
+    out["success"] = all(
+        n is not None for tables in out.values() for n in tables.values()
+    )
     return out
 
 
 def verify_results_detailed(pipe: MedallionPipeline) -> dict:
     """Checklist audit (etl_medallion.py:257-296): per expected table,
     row count + first 5 columns in ordinal position."""
-    out: dict[str, dict] = {}
-    for layer, tables in EXPECTED_TABLES.items():
-        out[layer] = {}
-        for t in tables:
-            try:
-                df = pipe.table(layer, t)
-                out[layer][t] = {
-                    "row_count": df.count(),
-                    "first_columns": df.columns[:5],
-                }
-            except Exception as e:
-                out[layer][t] = {"error": f"{e}"[:100]}
-    return out
+    def check(layer: str, t: str) -> dict:
+        try:
+            df = pipe.table(layer, t)
+            return {"row_count": df.count(), "first_columns": df.columns[:5]}
+        except Exception as e:
+            return {"error": f"{e}"[:100]}
+
+    return _audit_each_table(pipe, check)
 
 
 def observed_write(

@@ -10,6 +10,10 @@ products, and that the silver filters actually drop the dirty rows.
 from __future__ import annotations
 
 import math
+import os
+import sys
+import threading
+import time
 
 import duckdb
 import pytest
@@ -17,7 +21,11 @@ import pytest
 from etl_project_gcp_spark import datagen
 from etl_project_gcp_spark.plans import reports as RP
 from etl_project_gcp_spark.plans import verify as V
-from etl_project_gcp_spark.plans.medallion import MedallionPipeline
+from etl_project_gcp_spark.plans.medallion import (
+    BRONZE_TABLES,
+    MedallionPipeline,
+    run_concurrently,
+)
 from etl_project_gcp_spark.service import (
     health,
     sample_data,
@@ -254,6 +262,143 @@ def test_pipeline_halts_on_failed_layer(spark, tmp_path):
     assert result["layers"]["bronze"] == {
         "employees": False, "products": False, "sales": False,
     }
+
+
+def test_failed_statement_does_not_stop_its_concurrent_siblings(
+    spark, pipeline, tmp_path
+):
+    """One bronze statement fails while its siblings run beside it: the
+    siblings still land, the layer reports per statement in declared
+    order, and the pipeline halts before silver."""
+    _, sources, _ = pipeline
+    pipe = MedallionPipeline(spark, str(tmp_path / "wh"))
+    result = pipe.run_etl({**sources, "products": str(tmp_path / "missing")})
+    assert not result["success"]
+    assert list(result["layers"]) == ["bronze"]
+    bronze = result["layers"]["bronze"]
+    assert bronze == {"employees": True, "products": False, "sales": True}
+    assert list(bronze) == list(BRONZE_TABLES)
+    assert pipe.table("bronze", "employees").count() > 0
+    assert pipe.table("bronze", "sales").count() > 0
+    assert not os.path.exists(pipe.path("bronze", "products"))
+    assert not os.path.exists(str(tmp_path / "wh" / "silver"))
+
+
+def test_failed_gold_builder_keeps_sibling_gold_tables(
+    spark, pipeline, tmp_path, monkeypatch
+):
+    _, sources, _ = pipeline
+
+    def boom(self):
+        raise RuntimeError("product_metrics builder failed")
+
+    monkeypatch.setattr(MedallionPipeline, "_gold_product_metrics", boom)
+    pipe = MedallionPipeline(spark, str(tmp_path / "wh"))
+    result = pipe.run_etl(sources)
+    assert not result["success"]
+    assert list(result["layers"]) == ["bronze", "silver", "gold"]
+    assert result["layers"]["gold"] == {
+        "sales_analytics": True, "product_metrics": False, "sales_summary": True,
+    }
+    assert pipe.table("gold", "sales_analytics").count() > 0
+    assert pipe.table("gold", "sales_summary").count() > 0
+    assert not os.path.exists(pipe.path("gold", "product_metrics"))
+
+
+def test_run_concurrently_keeps_declared_order_and_joins_threads(spark):
+    baseline = threading.active_count()
+    # later-declared tasks finish first
+    got = run_concurrently(spark, {
+        k: (lambda k=k: time.sleep(0.05 * (3 - k)) or k * 10) for k in range(3)
+    })
+    assert list(got.items()) == [(0, 0), (1, 10), (2, 20)]
+    assert threading.active_count() == baseline
+
+    finished = []
+
+    def slow():
+        time.sleep(0.2)
+        finished.append("slow")
+
+    def fail():
+        raise ValueError("task failed")
+
+    with pytest.raises(ValueError, match="task failed"):
+        run_concurrently(spark, {"fail": fail, "slow": slow})
+    assert finished == ["slow"]  # the failure waited for its sibling
+    assert threading.active_count() == baseline
+
+
+def test_run_concurrently_without_pinned_threads(spark, monkeypatch):
+    """With PYSPARK_PIN_THREAD=false, inheritable_thread_target returns
+    its argument unchanged (the session, not a decorator); the tasks
+    still run, unwrapped."""
+    from etl_project_gcp_spark.plans import medallion
+
+    monkeypatch.setattr(medallion, "inheritable_thread_target", lambda f=None: f)
+    assert run_concurrently(spark, {"a": lambda: 1, "b": lambda: 2}) == {"a": 1, "b": 2}
+
+
+def test_run_concurrently_gives_each_task_its_own_local_properties(spark):
+    """More tasks than cores, each setting then reading back a local
+    property around a Spark job, under a short switch interval: a
+    property set by one task must never show up in a sibling's or in
+    the caller's."""
+    sc = spark.sparkContext
+    n = 2 * (os.cpu_count() or 4) + 4
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        def task(k):
+            sc.setLocalProperty("run_concurrently.task", str(k))
+            spark.range(100).count()
+            return sc.getLocalProperty("run_concurrently.task")
+
+        t0 = time.monotonic()
+        got = run_concurrently(spark, {k: (lambda k=k: task(k)) for k in range(n)})
+        assert time.monotonic() - t0 < 120
+    finally:
+        sys.setswitchinterval(switch)
+    assert got == {k: str(k) for k in range(n)}
+    assert sc.getLocalProperty("run_concurrently.task") is None
+
+
+def _job_ids(sc) -> set[int]:
+    """Every job id the status store holds, once queued events landed."""
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty(30_000)
+    jobs = jsc.statusStore().jobsList(None)
+    return {jobs.apply(i).jobId() for i in range(jobs.size())}
+
+
+def test_concurrent_service_path_keeps_job_group_and_leaks_no_threads(
+    spark, pipeline, tmp_path
+):
+    """Statements run on pool threads, yet every job they start carries
+    the caller's job group (so cancelling the group cancels an in-flight
+    ETL), and the pool threads are gone when each call returns."""
+    _, sources, _ = pipeline
+    pipe = MedallionPipeline(spark, str(tmp_path / "wh"))
+    sc = spark.sparkContext
+    group = "medallion-service-path-test"
+    sc.setJobGroup(group, "medallion service path")
+    try:
+        for call in (
+            lambda: trigger_etl(pipe, sources),
+            lambda: V.verify_results(pipe),
+            lambda: sample_data(pipe),
+        ):
+            before = _job_ids(sc)
+            threads = threading.active_count()
+            result = call()
+            assert threading.active_count() == threads
+            started = _job_ids(sc) - before
+            assert started, result
+            grouped = set(sc.statusTracker().getJobIdsForGroup(group))
+            assert started <= grouped, sorted(started - grouped)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert result["top_products"]
 
 
 def test_sql_twin_matches_dataframe_pipeline(spark, pipeline):

@@ -25,11 +25,13 @@ from __future__ import annotations
 
 import glob
 import os
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 from pyspark.sql import functions as F
 
 from etl_project_gcp_spark import datagen
+from etl_project_gcp_spark.plans.incremental import merge_into_partitioned
 from etl_project_gcp_spark.plans.medallion import (
     MedallionPipeline,
     refresh_partitions,
@@ -176,3 +178,36 @@ def test_refresh_partitions_rejects_stray_slice(spark, pipe):
             spark, gold_path, slice_df, ["year", "month"],
             [{"year": 2023, "month": 5}],  # slice also carries month 6
         )
+
+
+def test_refresh_and_upsert_never_set_session_overwrite_mode(
+    spark, pipe, tmp_path
+):
+    """Dynamic overwrite is a per-write option. The refresh and the
+    upsert run on a worker thread while this thread keeps reading the
+    session conf: it must read its prior value throughout, because a
+    sibling write running concurrently on the same session would
+    otherwise inherit dynamic mode."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prior = spark.conf.get(key)
+    target = str(tmp_path / "upsert_target")
+    sales = pipe.table("silver", "sales")
+    sales.write.partitionBy("channel").parquet(target)
+    batch = sales.filter(F.month("sale_date") == 7)
+    updates = sales.limit(20).withColumn("quantity", F.col("quantity") + 1)
+
+    def work():
+        touched = pipe.refresh_gold_sales_summary_incremental(batch)
+        parts = merge_into_partitioned(
+            spark, target, updates, ["transaction_id"], ["channel"]
+        )
+        return touched, parts
+
+    seen = set()
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        fut = pool.submit(work)
+        while not fut.done():
+            seen.add(spark.conf.get(key))
+        touched, parts = fut.result()
+    assert touched and parts
+    assert seen | {spark.conf.get(key)} == {prior}
